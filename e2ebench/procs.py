@@ -34,16 +34,22 @@ def descendants(pid: int) -> set[int]:
     return out
 
 
+_seen: dict[tuple[int, str], int] = {}  # (pid, start time) -> last CPU ticks read
+
+
 def tree_cpu_s(pid: int) -> float:
-    """User + system CPU seconds of ``pid`` and every live descendant,
-    including what their reaped children used."""
-    ticks = 0
+    """User + system CPU seconds of ``pid`` and its descendants, including
+    descendants that have since ended.  The PySpark daemon ignores SIGCHLD,
+    so an ended worker's time reaches no parent's cutime; each process's
+    last reading is kept instead (time it used after that reading is lost,
+    so the figure never goes down)."""
     for p in {pid} | descendants(pid):
         try:
-            ticks += sum(int(x) for x in _stat(p)[11:15])  # utime stime cutime cstime
+            st = _stat(p)
+            _seen[(p, st[19])] = sum(int(x) for x in st[11:15])  # utime stime cutime cstime
         except (OSError, IndexError, ValueError):
             continue  # the process ended between listing and reading
-    return ticks / _TICK
+    return sum(_seen.values()) / _TICK
 
 
 def hwm_mb(pid: int) -> float:

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import functools
 import json
-import statistics
 import time
 from contextlib import contextmanager
 
@@ -146,7 +145,3 @@ class Tracer:
     def dump(self, path: str) -> None:
         with open(path, "w", encoding="utf-8") as f:
             json.dump(self.spans, f)
-
-
-def median(xs, default: float = 0.0) -> float:
-    return statistics.median(xs) if xs else default
